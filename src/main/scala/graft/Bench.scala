@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line.
   *
@@ -31,16 +29,18 @@ object Bench {
     if (s.isEmpty) -1.0 else s(s.length / 2)
   }
 
+  /** (total seconds over the queries that ran, names of the queries
+    * that failed — negative sentinel — sorted). A failed query is left
+    * out of the total, so the run is only comparable when the failed
+    * list is empty; [[main]] exits nonzero otherwise. */
+  def tally(results: Seq[(String, Double)]): (Double, Seq[String]) = {
+    val (failed, ok) = results.partition(_._2 < 0)
+    (ok.map(_._2).sum, failed.map(_._1).sorted)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // ERROR, not WARN: the driver parses the ONE stdout JSON line, and
     // log4j warnings interleaving mid-line have broken that capture
     // before (BENCH_r09 "parsed": null) — bench_out.json is the backup,
@@ -167,7 +167,8 @@ object Bench {
     val contended = finalHint > 1.45
     val qs = finalResults.map { case (k, v, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = finalResults.map(_._2).filter(_ >= 0).sum
+    val (total, failed) = tally(finalResults.map { case (k, v, _) => (k, v) })
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // The legacy spread hint (median per-query best-of-2 max/min) rides
     // along as spread_hint for cross-round comparability with r3–r8
     // artifacts; it conflates planning/codegen with contention (idle
@@ -194,7 +195,7 @@ object Bench {
       new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
     } catch { case _: Throwable => -1.0 }
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spreads":$spreadsJson,"builds":$builds,"contention_hint":$finalHint,"spread_hint":$spreadHint,"contended":$contended,"loadavg_end":$loadAvg,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","failed":$failedJson,"queries":$qs,"spreads":$spreadsJson,"builds":$builds,"contention_hint":$finalHint,"spread_hint":$spreadHint,"contended":$contended,"loadavg_end":$loadAvg,"sf":"$sfDir"}"""
     // stdout AND a file: sbt/log4j noise can interleave with stdout, so
     // the file copy is the reliably machine-readable artifact.
     println(json)
@@ -211,5 +212,9 @@ object Bench {
       System.err.println(s"[bench] could not write bench_out.json: ${e.getMessage}")
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -1,26 +1,72 @@
 package graft
 
-/** Wall-clock registry for one-time, process-cached build costs (model
-  * fits, the IVF index). The memoizing operators report their cache
-  * MISS duration here, so Bench can emit a `builds` section next to
-  * the per-query steady-state numbers — amortization is the documented
-  * contract for those operators, but a regression in the build itself
-  * must stay visible (ADVICE r3).
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentHashMap
+
+/** The process-wide memo for build-once artifacts (model fits, ANN
+  * indexes, dedup and curation state, staging copies, the release
+  * manifest) and the wall-clock record of every build. Each build is
+  * timed on its cache MISS, so Bench can emit a `builds` section next
+  * to the per-query steady-state numbers — amortization is the
+  * documented contract for those operators, but a regression in the
+  * build itself must stay visible (ADVICE r3).
+  *
+  * Memo discipline, the same for every artifact:
+  *   - one build per (name, key) per process — the key is the scale dir
+  *     (plus any parameter the artifact depends on); the contract
+  *     assumes a dir's table contents are immutable for the process
+  *     lifetime;
+  *   - the build is single-flight per key: concurrent callers of the
+  *     SAME key wait for the one build, while builds of different keys
+  *     never share a lock (Verify's thread pool and `Par` gate legs run
+  *     unrelated builds side by side, and a build may read another
+  *     artifact);
+  *   - a failed build is not cached: it rethrows, and the next call
+  *     builds again;
+  *   - memoized values are session-free (local rows, fitted models,
+  *     paths) — a frame-shaped artifact is written to parquet through
+  *     [[onceDir]] and re-read by each caller in its own session.
   */
 object BuildTimes {
 
-  private val times = new java.util.concurrent.ConcurrentHashMap[String, Double]
+  private val times = new ConcurrentHashMap[String, Double]
 
-  /** Run `f`, recording its duration under `name` (last write wins —
-    * one build per (process, scale dir) means one record in practice). */
-  def timed[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    times.put(name, (System.nanoTime() - t0) / 1e9)
-    r
+  /** One memo slot; its monitor single-flights this key's build. */
+  private final class Slot {
+    var value: Option[Any] = None
+    var dir: Option[Path] = None
   }
 
-  /** Builds recorded so far, sorted by name. */
+  private val slots = new ConcurrentHashMap[(String, String), Slot]
+
+  /** The value `build` returns, built once per (name, key) and timed
+    * under `name`. */
+  def once[T](name: String, key: String)(build: => T): T =
+    memo(name, key, scratch = false)(_ => build)
+
+  /** Like [[once]], for an artifact written to disk: `build` receives a
+    * fresh [[TempDirs]] scratch dir to write into. If the dir vanishes
+    * (a tmp reaper), the next call rebuilds into a new one. */
+  def onceDir[T](name: String, key: String)(build: String => T): T =
+    memo(name, key, scratch = true)(dir => build(dir.get.toString))
+
+  private def memo[T](name: String, key: String, scratch: Boolean)(
+      build: Option[Path] => T): T = {
+    val slot = slots.computeIfAbsent((name, key), _ => new Slot)
+    slot.synchronized {
+      if (slot.value.isEmpty || slot.dir.exists(d => !Files.exists(d))) {
+        val t0 = System.nanoTime()
+        val dir = if (scratch) Some(TempDirs.create(s"graft_${name}_")) else None
+        val v = build(dir)
+        times.put(name, (System.nanoTime() - t0) / 1e9)
+        slot.dir = dir
+        slot.value = Some(v)
+      }
+      slot.value.get.asInstanceOf[T]
+    }
+  }
+
+  /** Builds recorded so far, sorted by name (last build wins). */
   def snapshot: Seq[(String, Double)] =
     scala.jdk.CollectionConverters.MapHasAsScala(times).asScala.toSeq.sortBy(_._1)
 }

@@ -107,23 +107,12 @@ object Tables {
       .foldLeft(trimmed) { case (d, (c, t)) => d.withColumn(c, adapt(c, d.schema(c).dataType, t)) }
   }
 
-  /** Tables whose downstream work is dominated by heavy PER-ROW
-    * compute (tokenize/shingle/regex for `documents`, 64-dim float
-    * math for `embeddings`) rather than by shuffles. A LOAD-TIME
-    * spread of these was tried in r20 and reverted: the full-bench
-    * A/B (idle pair, 379.6 s spread vs 383.0 s unspread over 321
-    * queries) showed the win concentrates in a handful of narrow
-    * per-row chains while every many-small-job pipeline (curation
-    * folds, minhash gates) pays the extra exchange — so the spread now
-    * lives in [[graft.ops.Spread]] and is applied PER OPERATOR at the
-    * measured-win sites only, keeping every other scan single-pass. */
-  private val perRowHeavy: Map[String, String] = Map.empty
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // Self-register the graft session functions on THIS session — the
     // lazy per-helper registration targets the thread's active session,
     // which in a multi-session app may not be the one analyzing the
-    // plan (see functions.Registry). Guarded, so effectively free.
+    // plan (see functions.Registry). Guarded, so effectively free; a
+    // session built without GraftExtensions needs it.
     graft.functions.Registry.registerAll(spark)
     // No-op for micros files; lets a TIMESTAMP(NANOS) regeneration load
     // as a long (which `canon` then converts) instead of erroring.

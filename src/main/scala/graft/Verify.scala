@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -20,17 +19,11 @@ object Verify {
     // Optional trailing query names restrict the dump (dev inner loop);
     // the driver always runs the full set.
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Dev-only knob for COVERAGE.md's determinism sweep: a 128 KB run
     // splits scan-side partial aggregation; the driver never sets it.
-    val mpb = sys.env.getOrElse("SPARK_GRAFT_MPB", "134217728")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", mpb)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark.conf.set("spark.sql.files.maxPartitionBytes",
+      sys.env.getOrElse("SPARK_GRAFT_MPB", "134217728"))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 

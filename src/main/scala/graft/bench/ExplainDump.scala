@@ -248,10 +248,7 @@ object ExplainDump {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/root/repo/EXPLAINS.md")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
     val sb = new StringBuilder

@@ -87,15 +87,9 @@ object GsodBench {
 
   def main(args: Array[String]): Unit = {
     val rows = sys.env.getOrElse("SPARK_GSOD_ROWS", "1000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val daysPerStation = 365
     val nStations = math.max(1, (rows / daysPerStation).toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     val raw = generate(spark, nStations, daysPerStation)

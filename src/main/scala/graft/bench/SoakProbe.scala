@@ -1,6 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.text.Dedup
 
@@ -11,13 +10,7 @@ import graft.text.Dedup
   * (the recall side of any banding change). */
 object SoakProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val IdOffset = graft.queries.DedupQueries.IdOffset
     val scales = (if (args.isEmpty) Seq("1,3,10,30") else args.toSeq)

@@ -88,43 +88,11 @@ case class DotProduct(left: Expression, right: Expression)
 
 object ArrayMath {
 
-  // Sessions graft has already registered on (weak keys — entries die
-  // with their session). Tracking OUR registrations, not
-  // `functionExists`, means a pre-existing user function named
-  // dot_product is replaced by graft's on first use (createOrReplace
-  // semantics) while repeated column construction still registers —
-  // and warns — only once per session.
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
-
-  /** Register graft expressions in the session's function registry
-    * (once per session; also makes them usable from `spark.sql`), plus
-    * the [[graft.plans.FuseDotProduct]] optimizer rule via
-    * `experimental.extraOptimizations` — the programmatic twin of
-    * installing [[graft.plans.GraftExtensions]] through
-    * `spark.sql.extensions`. The cheap `functionExists` probe on every
-    * call re-registers after a user's `DROP TEMPORARY FUNCTION` — the
-    * session guard alone would otherwise leave both the SQL name and
-    * graft's own Column surface permanently broken in that session. */
-  def register(spark: SparkSession): Unit = {
-    val firstUse = registered.putIfAbsent(spark, java.lang.Boolean.TRUE) == null
-    if (firstUse || !spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("dot_product"))) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    }
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.FuseDotProduct)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.FuseDotProduct
-    }
-  }
-
   /** Column surface for [[DotProduct]]. Registers against the active
     * session on first use (resolution happens at analysis time through
     * the session's function registry). */
   def dotProduct(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    SparkSession.getActiveSession.foreach(Registry.registerAll)
     call_function("dot_product", a, b)
   }
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions.call_function
 
 /** Bloom-filter surface over Spark's own sketch expressions
@@ -25,36 +22,6 @@ import org.apache.spark.sql.functions.call_function
   */
 object Bloom {
 
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
-
-  /** Register `graft_bloom_agg` / `graft_might_contain` in the
-    * session's function registry (same re-registration discipline as
-    * [[ArrayMath.register]]). */
-  def register(spark: SparkSession): Unit = {
-    val firstUse = registered.putIfAbsent(spark, java.lang.Boolean.TRUE) == null
-    // probe BOTH names: a user's DROP TEMPORARY FUNCTION of either one
-    // must trigger re-registration, or that function stays broken for
-    // the session (the failure mode ArrayMath.register documents)
-    if (firstUse ||
-      !spark.sessionState.functionRegistry.functionExists(
-        FunctionIdentifier("graft_bloom_agg")) ||
-      !spark.sessionState.functionRegistry.functionExists(
-        FunctionIdentifier("graft_might_contain"))) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_bloom_agg",
-        (exprs: Seq[Expression]) =>
-          new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-            .toAggregateExpression(),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_might_contain",
-        (exprs: Seq[Expression]) => BloomFilterMightContain(exprs(0), exprs(1)),
-        "built-in")
-    }
-  }
-
   /** Aggregate a LONG key column into a serialized bloom filter
     * (BinaryType, one row). Size it from an (approximate) item count —
     * `bitsPerItem = 8` gives ≈2% false positives, plenty for a
@@ -73,7 +40,7 @@ object Bloom {
     * degradation pass unnoticed. */
   def bloomAgg(key: Column, estimatedItems: Long, bitsPerItem: Long = 8L): Column = {
     SparkSession.getActiveSession.foreach { spark =>
-      register(spark)
+      Registry.registerAll(spark)
       val maxItems = spark.conf
         .get("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "4000000").toLong
       val maxBits = spark.conf
@@ -99,7 +66,7 @@ object Bloom {
   /** Membership probe of a LONG key against a serialized bloom column
     * (false ⇒ definitely absent; true ⇒ re-check exactly). */
   def mightContain(bloom: Column, key: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    SparkSession.getActiveSession.foreach(Registry.registerAll)
     call_function("graft_might_contain", bloom, key)
   }
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -59,36 +58,11 @@ object CmsSketch {
     bos.toByteArray
   }
 
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
-
-  /** Register the cms_* functions (same re-registration discipline as
-    * [[KllSketch.register]]). */
-  def register(spark: SparkSession): Unit = {
-    val firstUse = registered.putIfAbsent(spark, java.lang.Boolean.TRUE) == null
-    if (firstUse || !spark.sessionState.functionRegistry.functionExists(
-        FunctionIdentifier("cms_sketch_agg"))) {
-      val reg = spark.sessionState.functionRegistry
-      reg.createOrReplaceTempFunction("cms_sketch_agg",
-        (e: Seq[Expression]) =>
-          CmsSketchAgg(e(0), e(1), e(2), e(3), e(4)).toAggregateExpression(),
-        "built-in")
-      reg.createOrReplaceTempFunction("cms_merge_agg",
-        (e: Seq[Expression]) => CmsMergeAgg(e(0)).toAggregateExpression(),
-        "built-in")
-      reg.createOrReplaceTempFunction("cms_estimate",
-        (e: Seq[Expression]) => CmsEstimate(e(0), e(1)), "built-in")
-      reg.createOrReplaceTempFunction("cms_total",
-        (e: Seq[Expression]) => CmsTotal(e(0)), "built-in")
-    }
-  }
-
   /** Fold a STRING item column (weighted) into a CMS blob per group. */
   def cmsSketchAgg(item: Column, weight: Column,
       eps: Double = DefaultEps, confidence: Double = DefaultConfidence,
       seed: Int = Seed): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    SparkSession.getActiveSession.foreach(Registry.registerAll)
     call_function("cms_sketch_agg", item, weight, lit(eps), lit(confidence),
       lit(seed))
   }
@@ -96,19 +70,19 @@ object CmsSketch {
   /** Merge a column of CMS blobs (exact counter addition — requires
     * identical (ε, δ, seed); no data rescan). */
   def cmsMergeAgg(sketch: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    SparkSession.getActiveSession.foreach(Registry.registerAll)
     call_function("cms_merge_agg", sketch)
   }
 
   /** Point-frequency estimate for an item (≥ true count always). */
   def cmsEstimate(sketch: Column, item: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    SparkSession.getActiveSession.foreach(Registry.registerAll)
     call_function("cms_estimate", sketch, item)
   }
 
   /** Total weight the sketch absorbed (exact). */
   def cmsTotal(sketch: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    SparkSession.getActiveSession.foreach(Registry.registerAll)
     call_function("cms_total", sketch)
   }
 }

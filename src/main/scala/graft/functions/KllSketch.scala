@@ -5,7 +5,6 @@ import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -49,52 +48,28 @@ object KllSketch {
   private[functions] def heapify(bytes: Array[Byte]): KllDoublesSketch =
     KllDoublesSketch.heapify(Memory.wrap(bytes))
 
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
-
-  /** Register the kll_* functions (same re-registration discipline as
-    * [[TopKBy.register]]). */
-  def register(spark: SparkSession): Unit = {
-    val firstUse = registered.putIfAbsent(spark, java.lang.Boolean.TRUE) == null
-    if (firstUse || !spark.sessionState.functionRegistry.functionExists(
-        FunctionIdentifier("kll_sketch_agg"))) {
-      val reg = spark.sessionState.functionRegistry
-      reg.createOrReplaceTempFunction("kll_sketch_agg",
-        (e: Seq[Expression]) => KllSketchAgg(e(0), e(1)).toAggregateExpression(),
-        "built-in")
-      reg.createOrReplaceTempFunction("kll_merge_agg",
-        (e: Seq[Expression]) => KllMergeAgg(e(0)).toAggregateExpression(),
-        "built-in")
-      reg.createOrReplaceTempFunction("kll_quantile",
-        (e: Seq[Expression]) => KllQuantile(e(0), e(1)), "built-in")
-      reg.createOrReplaceTempFunction("kll_n",
-        (e: Seq[Expression]) => KllN(e(0)), "built-in")
-    }
-  }
-
   /** Fold a DOUBLE column into a KLL sketch blob (one per group). */
   def kllSketchAgg(value: Column, k: Int = DefaultK): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    SparkSession.getActiveSession.foreach(Registry.registerAll)
     call_function("kll_sketch_agg", value, org.apache.spark.sql.functions.lit(k))
   }
 
   /** Merge a column of sketch blobs into one blob — no data rescan. */
   def kllMergeAgg(sketch: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    SparkSession.getActiveSession.foreach(Registry.registerAll)
     call_function("kll_merge_agg", sketch)
   }
 
   /** Estimated quantile at `rank` ∈ [0,1] from a sketch blob (NULL for
     * an empty sketch). */
   def kllQuantile(sketch: Column, rank: Double): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    SparkSession.getActiveSession.foreach(Registry.registerAll)
     call_function("kll_quantile", sketch, org.apache.spark.sql.functions.lit(rank))
   }
 
   /** Number of values the sketch has absorbed (exact). */
   def kllN(sketch: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    SparkSession.getActiveSession.foreach(Registry.registerAll)
     call_function("kll_n", sketch)
   }
 }

@@ -192,22 +192,9 @@ object JaroWinklerAlgo {
 
 object StringSimilarity {
 
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
-
-  def register(spark: SparkSession): Unit = {
-    val firstUse = registered.putIfAbsent(spark, java.lang.Boolean.TRUE) == null
-    if (firstUse || !spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("jaro_winkler"))) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "jaro_winkler", exprs => JaroWinkler(exprs(0), exprs(1)), "built-in")
-    }
-  }
-
   /** Column surface for [[JaroWinkler]]. */
   def jaroWinkler(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    SparkSession.getActiveSession.foreach(Registry.registerAll)
     call_function("jaro_winkler", a, b)
   }
 }

@@ -3,7 +3,6 @@ package graft.functions
 import java.nio.ByteBuffer
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -193,27 +192,9 @@ case class TopKByAggregate(
 
 object TopKBy {
 
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
-
-  /** Register `top_k_by` in the session's function registry (same
-    * re-registration discipline as [[ArrayMath.register]]). */
-  def register(spark: SparkSession): Unit = {
-    val firstUse = registered.putIfAbsent(spark, java.lang.Boolean.TRUE) == null
-    if (firstUse || !spark.sessionState.functionRegistry.functionExists(
-        FunctionIdentifier("top_k_by"))) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "top_k_by",
-        (exprs: Seq[Expression]) =>
-          TopKByAggregate(exprs(0), exprs(1), exprs(2)).toAggregateExpression(),
-        "built-in")
-    }
-  }
-
   /** Column surface: `topKBy(score, id, k)` inside an `agg(...)`. */
   def topKBy(score: Column, id: Column, k: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    SparkSession.getActiveSession.foreach(Registry.registerAll)
     call_function("top_k_by", score, id, org.apache.spark.sql.functions.lit(k))
   }
 }

@@ -2114,11 +2114,8 @@ object AnalyticsQueries {
   private[queries] final case class Removal(baseline: Double,
       effects: Map[String, Double], residual: Double, nTrans: Long)
 
-  private val removalCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Removal]
-
   private def removalSolve(s: SparkSession, d: String): Removal =
-    removalCache.computeIfAbsent(d, _ => {
+    graft.BuildTimes.once("attribution_removal_solve", d) {
       val rows = journeyTransitions(s, d).collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       val bySrc = rows.groupBy(_._1).map { case (src, ts) =>
@@ -2157,7 +2154,7 @@ object AnalyticsQueries {
         c -> (if (base > 0) (base - b) / base else 0.0)
       }.toMap
       Removal(base, effects, resid, rows.map(_._3).sum)
-    })
+    }
 
   /** Hash-green gate for [[qAttributionRemoval]] (fail-closed): the
     * chain saw transitions, value iteration converged to the fixed
@@ -2807,19 +2804,16 @@ object AnalyticsQueries {
     * measures that a warm start beats a cold start at equal rounds and
     * that new nodes enter at the floor. */
   // The prior snapshot's ranks ARE persisted state in the incremental
-  // contract (yesterday's crawl already ranked) — build once per
-  // (process, dir) like every other prebuilt artifact, reported under
-  // builds.pagerank_prior_build.
-  private val priorRankCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
-
+  // contract (yesterday's crawl already ranked) — written to parquet
+  // once per (process, dir) like every other prebuilt artifact.
   private def priorRanks(s: SparkSession, docs: DataFrame, d: String): DataFrame =
-    priorRankCache.computeIfAbsent(d, _ =>
-      graft.BuildTimes.timed("pagerank_prior_build") {
-        graft.graph.PageRank.pageRank(
+    s.read.parquet(graft.BuildTimes.onceDir("pagerank_prior_build", d) { p =>
+      graft.graph.PageRank.pageRank(
           rotationEdges(docs.filter(col("doc_id") % 10 =!= 0)),
-          iters = 5, damping = 0.85).localCheckpoint(true)
-      })
+          iters = 5, damping = 0.85)
+        .write.mode("overwrite").parquet(p)
+      p
+    })
 
   def qDomainPagerankIncremental(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("source"))

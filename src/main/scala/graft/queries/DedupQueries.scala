@@ -100,10 +100,6 @@ object DedupQueries {
     Dedup.minhashPairs(corpusNear(s, d))
       .orderBy(col("id_a"), col("id_b"))
 
-  // one persisted index generation per (process, scale dir): the
-  // artifact under test is the parquet round-trip + incremental join
-  private val mhIdxCache = new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** Incremental MinHash near-dup: history = `documents`, indexed ONCE
     * and persisted to parquet ([[Dedup.minhashIndex]] frames — the
     * daily-pipeline artifact); delta = the perturbed near-dup copies.
@@ -116,14 +112,14 @@ object DedupQueries {
     * driver. */
   def qDedupIncrementalMinhash(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val dir = mhIdxCache.computeIfAbsent(d, _ =>
-      graft.BuildTimes.timed("minhash_index_build") {
-        val p = graft.TempDirs.create("graft_mhidx_").toString
-        val (bands, sets) = Dedup.minhashIndex(docs)
-        bands.write.mode("overwrite").parquet(s"$p/bands")
-        sets.write.mode("overwrite").parquet(s"$p/sets")
-        p
-      })
+    // one persisted index generation per (process, scale dir): the
+    // artifact under test is the parquet round-trip + incremental join
+    val dir = graft.BuildTimes.onceDir("minhash_index_build", d) { p =>
+      val (bands, sets) = Dedup.minhashIndex(docs)
+      bands.write.mode("overwrite").parquet(s"$p/bands")
+      sets.write.mode("overwrite").parquet(s"$p/sets")
+      p
+    }
     val delta = docs.select((col("doc_id") + IdOffset).as("doc_id"),
       concat_ws(" ", slice(Dedup.tokens(col("text")), 2, 100000)).as("text"))
     Dedup.incrementalMinhashPairs(
@@ -304,13 +300,6 @@ object DedupQueries {
        |SELECT id_a, id_b, jaccard FROM pairs
        |ORDER BY id_a, id_b""".stripMargin
 
-  // Build-once near-dup cluster map per scale dir (same cache
-  // discipline as SimilarityQueries.ivfCache: the parquet artifact
-  // survives spark.catalog.clearCache(), and compute() keeps the build
-  // single-flight under Verify's thread pool).
-  private val ccCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** The (doc_id, component) cluster map over the near-dup corpus —
     * connected components of the exact ngram-Jaccard pair graph,
     * computed ONCE per (process, scale dir) and persisted to a scratch
@@ -322,17 +311,12 @@ object DedupQueries {
     * builds section ([[graft.BuildTimes]]) so amortization stays
     * visible rather than hidden. */
   def clusterMapFor(s: SparkSession, d: String): DataFrame = {
-    val path = ccCache.compute(d, (_, cached) => {
-      if (cached != null &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(cached))) cached
-      else graft.BuildTimes.timed("cc_cluster_build") {
-        val comp = Dedup.connectedComponents(
+    val path = graft.BuildTimes.onceDir("cc_cluster_build", d) { p =>
+      Dedup.connectedComponents(
           Dedup.ngramJaccardPairs(corpusNear(s, d), k = 3, minJaccard = 0.8))
-        val p = graft.TempDirs.create("graft_cc_").toString
-        comp.write.mode("overwrite").parquet(p)
-        p
-      }
-    })
+        .write.mode("overwrite").parquet(p)
+      p
+    }
     s.read.parquet(path)
   }
 
@@ -380,10 +364,6 @@ object DedupQueries {
       .select(col("doc_id"))
       .orderBy(col("doc_id"))
 
-  // one persisted curation state per (process, scale dir) — the
-  // artifact under test is the state round-trip + incremental pass
-  private val curStateCache = new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** Incremental curation (Curation.incrementalCurate): day 1 curates
     * `documents` with the sketch tier and PERSISTS its SketchState to
     * parquet (digests + survivor band index — three small frames, not
@@ -397,16 +377,14 @@ object DedupQueries {
   // its bounds gate (the gate's scratch leg needs only the artifact, so
   // hoisting this lets the two legs run concurrently)
   private def curationStateDir(docs: DataFrame, d: String): String =
-    curStateCache.computeIfAbsent(d, _ =>
-      graft.BuildTimes.timed("curation_state_build") {
-        val p = graft.TempDirs.create("graft_curstate_").toString
-        val day1 = graft.text.Curation.curateSketch(docs, CurationMinQuality,
-          withAccounting = false)
-        day1.state.digests.write.mode("overwrite").parquet(s"$p/digests")
-        day1.state.bands.write.mode("overwrite").parquet(s"$p/bands")
-        day1.state.sets.write.mode("overwrite").parquet(s"$p/sets")
-        p
-      })
+    graft.BuildTimes.onceDir("curation_state_build", d) { p =>
+      val day1 = graft.text.Curation.curateSketch(docs, CurationMinQuality,
+        withAccounting = false)
+      day1.state.digests.write.mode("overwrite").parquet(s"$p/digests")
+      day1.state.bands.write.mode("overwrite").parquet(s"$p/bands")
+      day1.state.sets.write.mode("overwrite").parquet(s"$p/sets")
+      p
+    }
 
   def qCurationIncremental(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
@@ -1236,25 +1214,20 @@ object DedupQueries {
   // would re-shingle and re-join the paragraph frame). The SERVE
   // member deliberately does NOT read this cache — its live plan is
   // the operator's reviewable (and benched) shape.
-  private val paraExciseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private def paraExciseDir(s: SparkSession, d: String): String =
-    paraExciseCache.computeIfAbsent(d, _ =>
-      graft.BuildTimes.timed("para_excise_fixture_build") {
-        val p = graft.TempDirs.create("graft_paraexcise_").toString
-        val corpus = paraCorpus(s, d).select(col("doc_id"), col("text"))
-          .localCheckpoint(true)
-        val paras = graft.text.Dedup.paragraphFrame(corpus)
-        val (pairs, handles) = graft.text.Dedup.ngramJaccardPairsWithHandles(
-          paras, k = 3, minJaccard = 0.7, textCol = "para", idCol = "uid")
-        val cut = pairs.localCheckpoint(true)
-        handles.foreach(_.unpersist())
-        cut.write.mode("overwrite").parquet(s"$p/pairs")
-        graft.text.Dedup.paragraphExciseFromPairs(paras, cut, Nil)
-          .write.mode("overwrite").parquet(s"$p/excise")
-        p
-      })
+    graft.BuildTimes.onceDir("para_excise_fixture_build", d) { p =>
+      val corpus = paraCorpus(s, d).select(col("doc_id"), col("text"))
+        .localCheckpoint(true)
+      val paras = graft.text.Dedup.paragraphFrame(corpus)
+      val (pairs, handles) = graft.text.Dedup.ngramJaccardPairsWithHandles(
+        paras, k = 3, minJaccard = 0.7, textCol = "para", idCol = "uid")
+      val cut = pairs.localCheckpoint(true)
+      handles.foreach(_.unpersist())
+      cut.write.mode("overwrite").parquet(s"$p/pairs")
+      graft.text.Dedup.paragraphExciseFromPairs(paras, cut, Nil)
+        .write.mode("overwrite").parquet(s"$p/excise")
+      p
+    }
 
   def qDedupParagraphsExcise(s: SparkSession, d: String): DataFrame =
     graft.text.Dedup.paragraphExcise(paraCorpus(s, d))

@@ -1309,25 +1309,20 @@ object ExtraQueries {
       .transform(li)
   }
 
-  // one seeded classifier fit per (process, scale dir) — same
-  // build-once contract as MlQueries.gbtRegModel
-  private val gbtClsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.ml.classification.GBTClassificationModel]
-
   /** The ONE seeded classifier fit behind [[qMlGbtClassifier]],
-    * [[qMlCalibration]] and [[qMlEvalClassBounds]] — a single
-    * definition so the cache (keyed by scale dir only) can never serve
-    * a model whose params drifted in one of three copy-pasted
-    * closures. */
+    * [[qMlCalibration]] and [[qMlEvalClassBounds]], built once per
+    * (process, scale dir) — a single definition so the memo (keyed by
+    * scale dir only) can never serve a model whose params drifted in
+    * one of three copy-pasted closures. */
   private def gbtClsModel(
       s: SparkSession, d: String): org.apache.spark.ml.classification.GBTClassificationModel =
-    gbtClsCache.computeIfAbsent(d, _ => graft.BuildTimes.timed("gbt_classifier_fit") {
+    graft.BuildTimes.once("gbt_classifier_fit", d) {
       val (train, _) = graft.gsod.Train.split(assembledCls(s, d))
       new org.apache.spark.ml.classification.GBTClassifier()
         .setFeaturesCol("features").setLabelCol("label")
         .setMaxIter(3).setSeed(42L)
         .fit(train)
-    })
+    }
 
   /** GBT classifier smoke (binary label derived from price; rows-only),
     * completing the M9/M11/M13 surface at the driver level. */
@@ -2562,21 +2557,26 @@ object ExtraQueries {
         substring(col("name"), 10, 3),
         substring(col("name"), 14, 1000000)).as("name"))
 
+  // dictionary row count per scale dir: FuzzyJoin.resolve's broadcast
+  // size guard needs the dictionary size at plan-construction time
+  // (r16 ADVICE — an unparameterized resolve() call runs a count JOB
+  // per call, so the 3-resolve bounds gate and every plan-only
+  // consumer paid a full recount); the dict is a pure function of the
+  // scale dir, so one count per (process, dir) serves every resolve in
+  // the ER family
+  private def entityDictRows(dict: DataFrame, d: String): Long =
+    graft.BuildTimes.once("entity_dict_count", d)(dict.count())
+
   // one persisted day-1 match state per (process, scale dir): the
   // artifact under test is the parquet round-trip + delta-only resolve
-  private val erStateCache = new java.util.concurrent.ConcurrentHashMap[String, String]
-
-  // dictionary row count per scale dir (a plain Long — nothing
-  // session-tied): FuzzyJoin.resolve's broadcast size guard needs the
-  // dictionary size at plan-construction time (r16 ADVICE — an
-  // unparameterized resolve() call runs a count JOB per call, so the
-  // 3-resolve bounds gate and every plan-only consumer paid a full
-  // recount); the dict is a pure function of the scale dir, so one
-  // count per (process, dir) serves every resolve in the ER family
-  private val erDictCount = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-
-  private def entityDictRows(dict: DataFrame, d: String): Long =
-    erDictCount.computeIfAbsent(d, _ => dict.count()).longValue()
+  private def entityStateDir(dict: DataFrame, nDict: Option[Long],
+      d: String): String =
+    graft.BuildTimes.onceDir("entity_resolution_state_build", d) { p =>
+      graft.ops.FuzzyJoin.resolve(entityDirtyFrom(dict), dict,
+        blockPrefix = 4, threshold = 0.9, dictRows = nDict)
+        .write.mode("overwrite").parquet(p)
+      p
+    }
 
   /** Incremental entity resolution — the ER member of the
     * incremental-contract family (exact dedup, MinHash, curation, IVF,
@@ -2599,14 +2599,7 @@ object ExtraQueries {
   def qEntityResolutionInc(s: SparkSession, d: String): DataFrame = {
     val dict = entityDict(s, d).localCheckpoint(true)
     val nDict = Some(entityDictRows(dict, d))
-    val dir = erStateCache.computeIfAbsent(d, _ => {
-      val p = graft.TempDirs.create("graft_erstate_").toString
-      graft.ops.FuzzyJoin.resolve(entityDirtyFrom(dict), dict,
-        blockPrefix = 4, threshold = 0.9, dictRows = nDict)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    val state = s.read.parquet(dir)
+    val state = s.read.parquet(entityStateDir(dict, nDict, d))
     val deltaMatches = graft.ops.FuzzyJoin.resolve(entityDirtyDelta(dict), dict,
       blockPrefix = 4, threshold = 0.9, dictRows = nDict)
     state.unionByName(deltaMatches).orderBy(col("dirty_id"))
@@ -2639,7 +2632,7 @@ object ExtraQueries {
     val dAgg = delta.agg(count(lit(1)).as("n"),
       count(when(col("matched_id") === col("dirty_id") - 2000000L, 1)).as("self"))
       .head()
-    val state = s.read.parquet(erStateCache.get(d))
+    val state = s.read.parquet(entityStateDir(dict, Some(nDict), d))
     val day1 = inc.filter(col("dirty_id") < 2000000L)
     val carried = graft.ops.Diff.symDiffCount(day1, state)
     val ok = nDict > 0 && dAgg.getLong(0) > 0

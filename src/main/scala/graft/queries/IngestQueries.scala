@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Tables, TempDirs}
+import graft.{BuildTimes, Tables}
 
 /** Ingest-format operators (SURVEY.md §2.1 S1): the reference's ONLY
   * input path is a header'd CSV read with an explicit schema
@@ -15,10 +15,6 @@ import graft.{Tables, TempDirs}
   */
 object IngestQueries {
 
-  // one CSV staging write per (process, scale dir) — the artifact under
-  // test is the READ path; TempDirs deletes the staging dir on exit
-  private val csvCache = new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** CSV round-trip over `supplier` (bigint + string + int + double —
     * covers quoting and both numeric widths). Explicit schema on read:
     * no `inferSchema` double scan (SURVEY §4.3.4), exactly the
@@ -27,11 +23,12 @@ object IngestQueries {
     * pass. */
   def qCsvRoundtrip(s: SparkSession, d: String): DataFrame = {
     val src = Tables.supplier(s, d)
-    val path = csvCache.computeIfAbsent(d, _ => {
-      val p = TempDirs.create("graft_csv_").toString
+    // one staging write per (process, scale dir): the artifact under
+    // test is the READ path
+    val path = BuildTimes.onceDir("csv_staging_write", d) { p =>
       src.write.mode("overwrite").option("header", "true").csv(p)
       p
-    })
+    }
     s.read.option("header", "true").schema(src.schema).csv(path)
       .orderBy(col("s_suppkey"), col("s_name"), col("s_nationkey"), col("s_acctbal"))
   }
@@ -41,8 +38,6 @@ object IngestQueries {
       |FROM supplier
       |ORDER BY s_suppkey, s_name, s_nationkey, s_acctbal""".stripMargin
 
-  private val partCache = new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** Hive-style partitioned parquet: write lineitem partitioned by
     * return flag (the 100 TB table layout — one directory per key),
     * then aggregate one partition. The filter prunes at the DIRECTORY
@@ -51,11 +46,11 @@ object IngestQueries {
     * before a single row is decoded. Oracle = the same aggregate off
     * the unpartitioned original. */
   def qPartitionedScan(s: SparkSession, d: String): DataFrame = {
-    val path = partCache.computeIfAbsent(d, _ => {
-      val p = TempDirs.create("graft_part_").toString + "/lineitem"
+    val path = BuildTimes.onceDir("partitioned_lineitem_write", d) { dir =>
+      val p = dir + "/lineitem"
       Tables.lineitem(s, d).write.partitionBy("l_returnflag").parquet(p)
       p
-    })
+    }
     s.read.parquet(path)
       .filter(col("l_returnflag") === "R")
       .groupBy(col("l_linestatus"))
@@ -70,8 +65,6 @@ object IngestQueries {
       |GROUP BY l_linestatus
       |ORDER BY l_linestatus""".stripMargin
 
-  private val jsonlCache = new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** JSONL round-trip over `documents` — the interchange format LLM
     * corpora actually ship in (one JSON object per line). Write the
     * harness documents as JSON lines, read them back with an explicit
@@ -83,11 +76,10 @@ object IngestQueries {
   def qJsonlRoundtrip(s: SparkSession, d: String): DataFrame = {
     val src = Tables.documents(s, d)
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
-    val path = jsonlCache.computeIfAbsent(d, _ => {
-      val p = TempDirs.create("graft_jsonl_").toString
+    val path = BuildTimes.onceDir("jsonl_staging_write", d) { p =>
       src.write.mode("overwrite").json(p)
       p
-    })
+    }
     s.read.schema(src.schema).json(path)
       .orderBy(col("doc_id"))
   }
@@ -96,8 +88,6 @@ object IngestQueries {
     """SELECT doc_id, text, lang, source
       |FROM documents
       |ORDER BY doc_id""".stripMargin
-
-  private val orcCache = new java.util.concurrent.ConcurrentHashMap[String, String]
 
   /** ORC round-trip over `orders` — the other columnar format large
     * warehouses actually hold (Hive-era lakes are ORC; a 100 TB
@@ -109,11 +99,10 @@ object IngestQueries {
     * per stripe like parquet. */
   def qOrcRoundtrip(s: SparkSession, d: String): DataFrame = {
     val src = Tables.orders(s, d)
-    val path = orcCache.computeIfAbsent(d, _ => {
-      val p = TempDirs.create("graft_orc_").toString
+    val path = BuildTimes.onceDir("orc_staging_write", d) { p =>
       src.write.mode("overwrite").orc(p)
       p
-    })
+    }
     s.read.schema(src.schema).orc(path)
       .orderBy(col("o_orderkey"))
   }
@@ -123,8 +112,6 @@ object IngestQueries {
       |       o_orderdate, o_orderpriority
       |FROM orders
       |ORDER BY o_orderkey""".stripMargin
-
-  private val evoCache = new java.util.concurrent.ConcurrentHashMap[String, String]
 
   /** Schema evolution across table generations — the read-side reality
     * of a long-lived 100 TB table: files written before a column
@@ -138,8 +125,8 @@ object IngestQueries {
     * gen-1 rows). */
   def qSchemaEvolution(s: SparkSession, d: String): DataFrame = {
     val src = Tables.orders(s, d)
-    val path = evoCache.computeIfAbsent(d, _ => {
-      val p = TempDirs.create("graft_evo_").toString + "/orders"
+    val path = BuildTimes.onceDir("schema_evolution_write", d) { dir =>
+      val p = dir + "/orders"
       src.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
         .write.parquet(p + "/gen=1")
@@ -147,7 +134,7 @@ object IngestQueries {
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
         .write.parquet(p + "/gen=2")
       p
-    })
+    }
     s.read.option("mergeSchema", "true").parquet(path)
       .select(col("o_orderkey"), col("o_totalprice"),
         col("o_orderpriority"), col("gen").cast("int").as("gen"))

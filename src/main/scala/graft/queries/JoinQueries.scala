@@ -581,12 +581,6 @@ object JoinQueries {
       |                    AND o.o_totalprice > 300000.0)
       |ORDER BY c_custkey""".stripMargin
 
-  // ONE bucketed-table write per (process, scale dir) — table layout is
-  // an artifact, like the IVF index; data lives in a TempDirs dir
-  // (external tables, deleted on exit), metadata in the session catalog.
-  private val bucketCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]
-
   /** Bucketed co-located fact⋈fact join — THE 100 TB pattern for
     * repeated joins on one key: both sides written `bucketBy` the join
     * key, so the sort-merge join (and the groupBy on the same key)
@@ -596,24 +590,25 @@ object JoinQueries {
     * bucketing, not a broadcast, is what eliminates the shuffle.
     * Oracle = the plain join off the unbucketed parquet. */
   def qBucketedJoin(s: SparkSession, d: String): DataFrame = {
-    val (liT, oT) = bucketCache.computeIfAbsent(d, _ =>
-      graft.BuildTimes.timed("bucketed_tables_write") {
-        // collision-resistant suffix: 32-bit String.hashCode could let
-        // two scale dirs in one process overwrite each other's catalog
-        // tables while bucketCache serves the stale name
-        val suffix = java.security.MessageDigest.getInstance("SHA-256")
-          .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-        val liName = s"graft_li_bucketed_$suffix"
-        val oName = s"graft_ord_bucketed_$suffix"
-        val root = graft.TempDirs.create("graft_bucket_").toString
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_quantity"))
-          .write.bucketBy(16, "l_orderkey").sortBy("l_orderkey")
-          .option("path", s"$root/li").mode("overwrite").saveAsTable(liName)
-        Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
-          .write.bucketBy(16, "o_orderkey").sortBy("o_orderkey")
-          .option("path", s"$root/ord").mode("overwrite").saveAsTable(oName)
-        (liName, oName)
-      })
+    // ONE bucketed-table write per (process, scale dir) — table layout
+    // is an artifact, like the IVF index; data lives in the scratch dir
+    // (external tables), metadata in the session catalog
+    val (liT, oT) = graft.BuildTimes.onceDir("bucketed_tables_write", d) { root =>
+      // collision-resistant suffix: 32-bit String.hashCode could let
+      // two scale dirs in one process overwrite each other's catalog
+      // tables while the memo serves the stale name
+      val suffix = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+      val liName = s"graft_li_bucketed_$suffix"
+      val oName = s"graft_ord_bucketed_$suffix"
+      Tables.lineitem(s, d).select(col("l_orderkey"), col("l_quantity"))
+        .write.bucketBy(16, "l_orderkey").sortBy("l_orderkey")
+        .option("path", s"$root/li").mode("overwrite").saveAsTable(liName)
+      Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
+        .write.bucketBy(16, "o_orderkey").sortBy("o_orderkey")
+        .option("path", s"$root/ord").mode("overwrite").saveAsTable(oName)
+      (liName, oName)
+    }
     val li = s.table(liT)
     val o = s.table(oT)
     li.join(o.hint("merge"), li("l_orderkey") === o("o_orderkey"))

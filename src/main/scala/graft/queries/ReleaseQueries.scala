@@ -38,34 +38,25 @@ object ReleaseQueries {
   // one manifest computation per (process, scale dir, tier): the
   // certified manifest feeds q_corpus_release AND the prod bounds
   // gate, the production manifest feeds q_corpus_release_prod AND the
-  // same gate — without the cache each member would re-run the full
-  // nine-stage pipeline (the hotCappedIndexDir shared-artifact
-  // discipline; the manifest is ~10 tiny rows, so the cache is a
-  // parquet write of nothing)
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
+  // same gate — without the memo each member would re-run the full
+  // nine-stage pipeline (the manifest is ~10 tiny rows, so the
+  // artifact is a parquet write of nothing)
   private def manifestDir(s: SparkSession, d: String,
       tiers: graft.text.Curation.ReleaseTiers, tag: String): String =
-    manifestCache.computeIfAbsent(s"$d#$tag", _ =>
-      // BuildTimes-registered: the one-per-process manifest build must
-      // show in the bench `builds` section, not hide behind the
-      // members' warm-cache serve times
-      graft.BuildTimes.timed(s"release_manifest_${tag}_build") {
-        val p = graft.TempDirs.create(s"graft_manifest_${tag}_").toString
-        val probe = Tables.documents(s, d)
-          .filter(col("doc_id") % 97 === 0)
-          .select(col("doc_id"), col("text"))
-        graft.text.Curation.releaseManifest(
-            DedupQueries.paraCorpus(s, d),
-            QualityQueries.BlockPhrases,
-            DedupQueries.CurationMinQuality,
-            probe,
-            ExtraQueries.WaterFillWeights.toMap,
-            tiers)
-          .write.mode("overwrite").parquet(p)
-        p
-      })
+    graft.BuildTimes.onceDir(s"release_manifest_${tag}_build", d) { p =>
+      val probe = Tables.documents(s, d)
+        .filter(col("doc_id") % 97 === 0)
+        .select(col("doc_id"), col("text"))
+      graft.text.Curation.releaseManifest(
+          DedupQueries.paraCorpus(s, d),
+          QualityQueries.BlockPhrases,
+          DedupQueries.CurationMinQuality,
+          probe,
+          ExtraQueries.WaterFillWeights.toMap,
+          tiers)
+        .write.mode("overwrite").parquet(p)
+      p
+    }
 
   private def certifiedManifest(s: SparkSession, d: String): DataFrame =
     s.read.parquet(manifestDir(s, d,

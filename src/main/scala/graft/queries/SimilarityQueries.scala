@@ -222,38 +222,26 @@ object SimilarityQueries {
   // parquet PARTITIONED BY cell (the on-disk shape of a real inverted
   // file: probing nProbe cells scans only those directories — partition
   // pruning, not a full-corpus scan) plus the tiny centroid table.
-  // Centroids are kept as local rows so the cached entry is not tied to
-  // the building session. computeIfAbsent keeps the build single-flight
-  // under Verify's thread pool, and the artifact survives
+  // Centroids are kept as local rows so the memoized entry is not tied
+  // to the building session, and the artifact survives
   // spark.catalog.clearCache() (which would evict a merely-persisted
   // index between bench runs).
-  private val ivfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Seq[(Int, Seq[Double])])]
-
   /** Build (or fetch the prebuilt) IVF index for the scale dir:
     * (index parquet path, centroids). nCells scales as √N — the
     * classical IVF sizing: cell size N/√N = √N keeps build cost
-    * (k-means over N) and probe cost (nProbe·√N) balanced. The index
-    * parquet lives in a [[graft.TempDirs]] scratch dir (deleted on JVM
-    * exit); if a tmp reaper removes it mid-process the cache entry is
-    * discarded and the index rebuilt. Build time is reported to
-    * [[graft.BuildTimes]] so Bench can expose it separately from
-    * search. */
+    * (k-means over N) and probe cost (nProbe·√N) balanced. Build time
+    * is reported to [[graft.BuildTimes]] so Bench can expose it
+    * separately from search. */
   def ivfIndexFor(s: SparkSession, d: String): (String, Seq[(Int, Seq[Double])]) =
-    ivfCache.compute(d, (_, cached) => {
-      if (cached != null &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(cached._1))) cached
-      else graft.BuildTimes.timed("ivf_index_build") {
-        val c = corpus(s, d)
-        val nCells = math.max(4, math.sqrt(c.count().toDouble).toInt)
-        val (indexed, centroids) = Similarity.ivfIndex(c, nCells = nCells)
-        val path = graft.TempDirs.create("graft_ivf_").toString
-        indexed.write.mode("overwrite").partitionBy("cell").parquet(path)
-        val localCentroids = centroids.collect()
-          .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq
-        (path, localCentroids)
-      }
-    })
+    graft.BuildTimes.onceDir("ivf_index_build", d) { path =>
+      val c = corpus(s, d)
+      val nCells = math.max(4, math.sqrt(c.count().toDouble).toInt)
+      val (indexed, centroids) = Similarity.ivfIndex(c, nCells = nCells)
+      indexed.write.mode("overwrite").partitionBy("cell").parquet(path)
+      val localCentroids = centroids.collect()
+        .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq
+      (path, localCentroids)
+    }
 
   /** IVF search with a caller-chosen probe width — the recall/cost
     * knob a 100 TB deployment must own: recall and candidate volume
@@ -280,29 +268,20 @@ object SimilarityQueries {
     qSimIvfProbe(s, d, math.max(2, localCentroids.size / 2))
   }
 
-  // build-once PQ artifact per scale dir: codebooks (driver-local) +
-  // encoded codes parquet (same cache discipline as ivfCache)
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Array[Array[Double]]], String)]
-
   /** PQ codebooks + encoded corpus for the scale dir. m=8 subspaces ×
     * k=16 centroids over the 64-dim embeddings: codes are 8 nibbles
     * (4 bytes) per vector vs 256 bytes of floats — the memory ratio
-    * that keeps a corpus-scale ANN index resident. Build cost (8
-    * sub-space k-means fits + one encode pass) reported as
+    * that keeps a corpus-scale ANN index resident. Built once per
+    * scale dir: codebooks (driver-local) + encoded codes parquet; build
+    * cost (8 sub-space k-means fits + one encode pass) reported as
     * `pq_index_build`. */
   def pqIndexFor(s: SparkSession, d: String): (Array[Array[Array[Double]]], String) =
-    pqCache.compute(d, (_, cached) => {
-      if (cached != null &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(cached._2))) cached
-      else graft.BuildTimes.timed("pq_index_build") {
-        val c = corpus(s, d)
-        val cb = Similarity.pqCodebooks(c, m = 8, k = 16)
-        val path = graft.TempDirs.create("graft_pq_").toString
-        Similarity.pqEncode(c, cb).write.mode("overwrite").parquet(path)
-        (cb, path)
-      }
-    })
+    graft.BuildTimes.onceDir("pq_index_build", d) { path =>
+      val c = corpus(s, d)
+      val cb = Similarity.pqCodebooks(c, m = 8, k = 16)
+      Similarity.pqEncode(c, cb).write.mode("overwrite").parquet(path)
+      (cb, path)
+    }
 
   /** PQ ADC top-5 with exact re-rank — rows-only (k-means is not
     * SQL-expressible); recall vs brute force asserted in
@@ -367,10 +346,6 @@ object SimilarityQueries {
       minCosine = 0.95)
       .orderBy(col("id_a"), col("id_b"))
 
-  // build-once cluster assignment for the semantic-dedup corpus (same
-  // contract and cache discipline as ivfCache above)
-  private val semCache = new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** SemDeDup semantic dedup over corpus ∪ scaled copy: every scaled
     * vector is an exact cosine-1 duplicate of its base, so its keeper
     * must resolve to the base id (asserted in SimilaritySpec) —
@@ -379,27 +354,17 @@ object SimilarityQueries {
     * per scale dir, `semantic_cluster_build` in Bench's builds
     * section); each run pays only pair-gen + verify + CC. */
   def qDedupSemantic(s: SparkSession, d: String): DataFrame = {
-    val path = semCache.compute(d, (_, cached) => {
-      if (cached != null &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(cached))) cached
-      else graft.BuildTimes.timed("semantic_cluster_build") {
-        val base = corpus(s, d)
-        val doubled = base.select((col("vec_id") + DedupQueries.IdOffset).as("vec_id"),
-          transform(col("embedding"), x => x * 2.0f).as("embedding"))
-        val (indexed, _) = Similarity.ivfIndex(base.union(doubled), nCells = 16)
-        val p = graft.TempDirs.create("graft_sem_").toString
-        indexed.write.mode("overwrite").parquet(p)
-        p
-      }
-    })
+    val path = graft.BuildTimes.onceDir("semantic_cluster_build", d) { p =>
+      val base = corpus(s, d)
+      val doubled = base.select((col("vec_id") + DedupQueries.IdOffset).as("vec_id"),
+        transform(col("embedding"), x => x * 2.0f).as("embedding"))
+      val (indexed, _) = Similarity.ivfIndex(base.union(doubled), nCells = 16)
+      indexed.write.mode("overwrite").parquet(p)
+      p
+    }
     Similarity.semanticDedupFromIndex(s.read.parquet(path))
       .orderBy(col("vec_id"))
   }
-
-  // build-once prior dedup verdict over the base IVF index — the
-  // "yesterday's state" the incremental query folds into (same
-  // build-once cache discipline as ivfCache)
-  private val semIncCache = new java.util.concurrent.ConcurrentHashMap[String, String]
 
   /** Incremental SemDeDup ([[Similarity.semanticDedupIncrement]]) — the
     * semantic member of the incremental-dedup family (exact, MinHash,
@@ -416,16 +381,13 @@ object SimilarityQueries {
   def qDedupSemanticIncremental(s: SparkSession, d: String): DataFrame = {
     val (ivfPath, localCentroids) = ivfIndexFor(s, d)
     val priorIndex = s.read.parquet(ivfPath)
-    val keepersPath = semIncCache.compute(d, (_, cached) => {
-      if (cached != null &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(cached))) cached
-      else graft.BuildTimes.timed("semantic_prior_keepers_build") {
-        val p = graft.TempDirs.create("graft_semk_").toString
-        Similarity.semanticDedupFromIndex(priorIndex)
-          .write.mode("overwrite").parquet(p)
-        p
-      }
-    })
+    // build-once prior dedup verdict over the base IVF index — the
+    // "yesterday's state" the incremental query folds into
+    val keepersPath = graft.BuildTimes.onceDir("semantic_prior_keepers_build", d) { p =>
+      Similarity.semanticDedupFromIndex(priorIndex)
+        .write.mode("overwrite").parquet(p)
+      p
+    }
     import s.implicits._
     val centroids = localCentroids.toDF("cell", "centroid")
     Similarity.semanticDedupIncrement(
@@ -1278,7 +1240,7 @@ object SimilarityQueries {
     least(floor((cos + lit(1.0)) * lit(5.0)), lit(9L)).cast("int")
 
   private def driftCosFrame(s: SparkSession, d: String): DataFrame = {
-    graft.functions.ArrayMath.register(s)
+    graft.functions.Registry.registerAll(s)
     val emb = Tables.embeddings(s, d)
       .select(col("vec_id"), driftQuantized(col("embedding")).as("q"))
     val cent = emb
@@ -1304,24 +1266,19 @@ object SimilarityQueries {
     * derivation — the centroid components are exact integer sums, so
     * collecting them to literals changes the plan, never the value. */
   def driftReference(s: SparkSession, d: String): (Seq[Double], Seq[(Int, Long)]) =
-    driftRefCache.computeIfAbsent(d, _ =>
-      graft.BuildTimes.timed("drift_reference_build") {
-        val f = driftCosFrame(s, d).localCheckpoint(true)
-        val cvec = Tables.embeddings(s, d)
-          .select(posexplode(driftQuantized(col("embedding")))
-            .as(Seq("dim", "v")))
-          .groupBy(col("dim")).agg(sum(col("v")).as("c"))
-          .orderBy(col("dim")).collect()
-          .map(_.getLong(1).toDouble).toSeq
-        val ref = f.groupBy(col("bin")).agg(count(lit(1)).as("n_ref"))
-          .orderBy(col("bin")).collect()
-          .map(r => (r.getInt(0), r.getLong(1))).toSeq
-        (cvec, ref)
-      })
-
-  private val driftRefCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (Seq[Double], Seq[(Int, Long)])]
+    graft.BuildTimes.once("drift_reference_build", d) {
+      val f = driftCosFrame(s, d).localCheckpoint(true)
+      val cvec = Tables.embeddings(s, d)
+        .select(posexplode(driftQuantized(col("embedding")))
+          .as(Seq("dim", "v")))
+        .groupBy(col("dim")).agg(sum(col("v")).as("c"))
+        .orderBy(col("dim")).collect()
+        .map(_.getLong(1).toDouble).toSeq
+      val ref = f.groupBy(col("bin")).agg(count(lit(1)).as("n_ref"))
+        .orderBy(col("bin")).collect()
+        .map(r => (r.getInt(0), r.getLong(1))).toSeq
+      (cvec, ref)
+    }
 
   /** The smoothed-share PSI grid over (ref bins × sources) — the ONE
     * finalize both the batch query and the streaming face run, so the

@@ -514,12 +514,8 @@ object TextQueries {
   // one persisted train band-index generation per (process, scale
   // dir): the artifact under test is the parquet round-trip + the
   // delta-only banding (train is never re-shingled per eval batch)
-  private val fuzzyIdxCache = new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private def fuzzyTrainIndexDir(s: SparkSession, d: String): String =
-    fuzzyIdxCache.computeIfAbsent(d, _ =>
-      graft.BuildTimes.timed("fuzzy_train_index_build") {
-      val p = graft.TempDirs.create("graft_fuzzyidx_").toString
+    graft.BuildTimes.onceDir("fuzzy_train_index_build", d) { p =>
       val train = Tables.documents(s, d).select(col("doc_id"), col("text"))
         .filter(col("doc_id") % 2 === 0)
       val (tb, tsets, handle) = graft.text.Dedup
@@ -528,7 +524,7 @@ object TextQueries {
       tsets.write.mode("overwrite").parquet(s"$p/sets")
       handle.unpersist()
       p
-    })
+    }
 
   /** Incremental member of the fuzzy-decontamination contract: a NEW
     * eval batch (last-token-dropped paraphrases at a different offset
@@ -773,13 +769,8 @@ object TextQueries {
   // one persisted train shingle-frame generation per (process, scale
   // dir): the artifact under test is the parquet round-trip — train is
   // never re-shingled per eval batch (the fuzzyTrainIndexDir pattern)
-  private val containIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private def containTrainIndexDir(s: SparkSession, d: String): String =
-    containIdxCache.computeIfAbsent(d, _ =>
-      graft.BuildTimes.timed("containment_index_build") {
-      val p = graft.TempDirs.create("graft_containidx_").toString
+    graft.BuildTimes.onceDir("containment_index_build", d) { p =>
       val train = docsSpread(s, d)
         .filter(col("doc_id") % 2 === 0)
       // the persisted index is DF-CAPPED at build (r19: the 100 TB
@@ -796,7 +787,7 @@ object TextQueries {
       idx.kept.write.mode("overwrite").parquet(s"$p/kept")
       idx.hot.write.mode("overwrite").parquet(s"$p/hot")
       p
-    })
+    }
 
   /** The containment tier's df cap: 10% of the train document count,
     * floored at 1 — spelled max(n/10, 1) on BOTH engines so the twin
@@ -1012,13 +1003,8 @@ object TextQueries {
     * (train_id, sh) frame — the bounds gate's K=∞ / uncapped legs
     * derive from it without a third shingling. The cap is the same
     * max(n_train/10, 1) rule as the production index. */
-  private val hotIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private def hotCappedIndexDir(s: SparkSession, d: String): String =
-    hotIdxCache.computeIfAbsent(d, _ =>
-      graft.BuildTimes.timed("hot_capped_fixture_build") {
-      val p = graft.TempDirs.create("graft_hotidx_").toString
+    graft.BuildTimes.onceDir("hot_capped_fixture_build", d) { p =>
       val docs = docsSpread(s, d)
       val train = hotTrainCorpus(docs)
       val raw = graft.text.Dedup.literalShingleFrame(train, 3, "train_id")
@@ -1028,7 +1014,7 @@ object TextQueries {
       idx.kept.write.mode("overwrite").parquet(s"$p/kept")
       idx.hot.write.mode("overwrite").parquet(s"$p/hot")
       p
-    })
+    }
 
   private def hotCappedIndex(s: SparkSession,
       d: String): graft.text.Dedup.CappedShingleIndex = {
@@ -2044,16 +2030,12 @@ object TextQueries {
   // artifact shared by the encode query and the round-trip gate, not a
   // per-query cost (the ivfIndexFor build-once contract; q_bpe_train
   // keeps measuring the training loop itself at its own budget).
-  private val mergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[graft.text.Bpe.Merge]]
-
   private def merges30(s: SparkSession, d: String): Seq[graft.text.Bpe.Merge] =
-    mergeCache.computeIfAbsent(d, _ =>
-      graft.BuildTimes.timed("bpe_merge_table_build") {
-        graft.text.Bpe.learnMerges(
-          Tables.documents(s, d).select(col("doc_id"), col("text")),
-          numMerges = 30)
-      })
+    graft.BuildTimes.once("bpe_merge_table_build", d) {
+      graft.text.Bpe.learnMerges(
+        Tables.documents(s, d).select(col("doc_id"), col("text")),
+        numMerges = 30)
+    }
 
   def qBpeEncode(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
@@ -2315,10 +2297,6 @@ object TextQueries {
       |  2 * nd AS n_urls, 2 * nd AS n_raw_forms
       |FROM g ORDER BY url""".stripMargin
 
-  // one persisted train-shingle index per (process, scale dir): the
-  // artifact under test is the parquet round-trip + digest semi-join
-  private val contamStateCache = new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** Incremental decontamination — the contamination member of the
     * incremental-contract family: the train set's distinct trigram
     * DIGESTS (xxhash64 → 8 bytes/shingle, the production index
@@ -2347,13 +2325,14 @@ object TextQueries {
           .otherwise(expr("cast(array() as array<string>)")))
       .select(col("doc_id"), explode(col("shingles")).as("sh"))
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val dir = contamStateCache.computeIfAbsent(d, _ => {
-      val p = graft.TempDirs.create("graft_contamidx_").toString
+    // one persisted train-shingle index per (process, scale dir): the
+    // artifact under test is the parquet round-trip + digest semi-join
+    val dir = graft.BuildTimes.onceDir("contamination_index_build", d) { p =>
       shingles(docs.filter(col("doc_id") % 2 === 0))
         .select(xxhash64(col("sh")).as("dig")).distinct()
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
     val index = s.read.parquet(dir).withColumn("hit", lit(1))
     val delta = docs.filter(col("doc_id") % 2 === 0)
       .select((col("doc_id") + DedupQueries.IdOffset).as("doc_id"), col("text"))
@@ -2406,10 +2385,6 @@ object TextQueries {
        |FROM delta LEFT JOIN agg USING (doc_id)
        |ORDER BY delta.doc_id""".stripMargin
 
-  // one persisted sketch-state generation per (process, scale dir):
-  // the artifact under test is the parquet round-trip + sketch merge
-  private val hhStateCache = new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** Incremental heavy hitters — the streaming-state member of the
     * incremental-contract family (exact, MinHash, curation, IVF,
     * PageRank, SemDeDup): yesterday's corpus lives on as ONE persisted
@@ -2435,14 +2410,15 @@ object TextQueries {
     def toks(df: DataFrame) =
       df.select(explode(TextAnalysis.tokens(col("text"))).as("term"))
     val docs = Tables.documents(s, d).select(col("text"))
-    val dir = hhStateCache.computeIfAbsent(d, _ => {
-      val p = graft.TempDirs.create("graft_hhstate_").toString
+    // one persisted sketch-state generation per (process, scale dir):
+    // the artifact under test is the parquet round-trip + sketch merge
+    val dir = graft.BuildTimes.onceDir("heavy_hitters_state_build", d) { p =>
       toks(docs).agg(expr("approx_top_k_accumulate(term, 100000)").as("sk"))
         .write.mode("overwrite").parquet(s"$p/sketch")
       toks(docs).agg(count(lit(1)).as("n"))
         .write.mode("overwrite").parquet(s"$p/total")
       p
-    })
+    }
     val delta = docs.select(
       concat(col("text"), lit(" graftdelta graftdelta graftdelta")).as("text"))
     val deltaSk = toks(delta)

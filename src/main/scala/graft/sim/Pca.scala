@@ -1,7 +1,5 @@
 package graft.sim
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
 import org.apache.spark.mllib.linalg.distributed.RowMatrix
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -40,34 +38,31 @@ object Pca {
       components: Array[Array[Double]], // k rows, d cols
       n: Long)
 
-  private val cache = new ConcurrentHashMap[String, Fit]
-
   def fit(s: SparkSession, d: String, k: Int = 16): Fit =
-    cache.computeIfAbsent(s"$d#$k", _ =>
-      graft.BuildTimes.timed("pca_fit") {
-        // canonical fit layout (Similarity.canonicalFitInput doc): the
-        // Gramian fold is partition-order sensitive, so pin the
-        // historical single id-ordered partition whatever the
-        // upstream partitioning
-        val emb = Similarity.canonicalFitInput(
-            Tables.embeddings(s, d)
-              .select(col("vec_id"),
-                Similarity.asDouble(col("embedding")).as("e")),
-            "vec_id")
-          .select(col("e"))
-        val rows = emb.rdd.map(r => OldVectors.dense(
-          r.getSeq[Double](0).toArray))
-        rows.cache()
-        try {
-          val rm = new RowMatrix(rows)
-          val pc = rm.computePrincipalComponents(k) // d×k, covariance-centered
-          val mean = rm.computeColumnSummaryStatistics().mean.toArray
-          val dDim = pc.numRows
-          val comps = Array.tabulate(k)(j =>
-            Array.tabulate(dDim)(i => pc(i, j)))
-          Fit(mean, comps, rm.numRows())
-        } finally { rows.unpersist(); () }
-      })
+    graft.BuildTimes.once("pca_fit", s"$d#$k") {
+      // canonical fit layout (Similarity.canonicalFitInput doc): the
+      // Gramian fold is partition-order sensitive, so pin the
+      // historical single id-ordered partition whatever the
+      // upstream partitioning
+      val emb = Similarity.canonicalFitInput(
+          Tables.embeddings(s, d)
+            .select(col("vec_id"),
+              Similarity.asDouble(col("embedding")).as("e")),
+          "vec_id")
+        .select(col("e"))
+      val rows = emb.rdd.map(r => OldVectors.dense(
+        r.getSeq[Double](0).toArray))
+      rows.cache()
+      try {
+        val rm = new RowMatrix(rows)
+        val pc = rm.computePrincipalComponents(k) // d×k, covariance-centered
+        val mean = rm.computeColumnSummaryStatistics().mean.toArray
+        val dDim = pc.numRows
+        val comps = Array.tabulate(k)(j =>
+          Array.tabulate(dDim)(i => pc(i, j)))
+        Fit(mean, comps, rm.numRows())
+      } finally { rows.unpersist(); () }
+    }
 
   /** PCA-shortlist ANN (the PQ tier's shortlist-then-rerank contract
     * with a LINEAR map instead of quantization): shortlist by cosine
@@ -98,7 +93,7 @@ object Pca {
     * narrow codegen'd projection over the embedding scan. */
   def project(s: SparkSession, d: String, k: Int = 16): DataFrame = {
     val f = fit(s, d, k)
-    graft.functions.ArrayMath.register(s)
+    graft.functions.Registry.registerAll(s)
     val x = Similarity.asDouble(col("embedding"))
     val dims = f.components.map { c =>
       val offset = c.zip(f.mean).map { case (ci, mi) => ci * mi }.sum

@@ -51,7 +51,7 @@ object Similarity {
 
   /** Corpus with a pre-normalized embedding column `norm`. */
   def withNormalized(df: DataFrame, embCol: String = "embedding"): DataFrame = {
-    graft.functions.ArrayMath.register(df.sparkSession)
+    graft.functions.Registry.registerAll(df.sparkSession)
     df.withColumn("norm", l2Normalize(asDouble(col(embCol))))
   }
 

@@ -328,7 +328,7 @@ object Streaming {
     * for the binning. */
   def embDriftCounts(emb: DataFrame, cvec: Seq[Double]): DataFrame = {
     import graft.queries.SimilarityQueries._
-    graft.functions.ArrayMath.register(emb.sparkSession)
+    graft.functions.Registry.registerAll(emb.sparkSession)
     emb
       .select(col("source"),
         driftBin(driftCos(driftQuantized(col("embedding")),

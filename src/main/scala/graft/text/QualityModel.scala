@@ -1,7 +1,5 @@
 package graft.text
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -88,8 +86,6 @@ object QualityModel {
   final case class Fit(weights: Array[Double], bias: Double,
       auc: Double, nTrain: Long, nHold: Long)
 
-  private val cache = new ConcurrentHashMap[String, Fit]
-
   /** Fit per scale dir (build-once, BuildTimes-reported). The pivot
     * densifies ONLY the train split; the fitted coefficients are Dim
     * doubles — the one documented driver-side collect here. Holdout
@@ -97,40 +93,39 @@ object QualityModel {
     * model.transform) so the gate certifies the exact path production
     * scoring uses. */
   def fit(s: SparkSession, d: String): Fit =
-    cache.computeIfAbsent(d, _ =>
-      graft.BuildTimes.timed("quality_classifier_fit") {
-        val lab = labeled(s, d)
-        val train = lab.filter(!col("is_holdout"))
-        val cols = (0 until Dim).map(_.toString)
-        // labels LEFT-join the pivot (zero-filling features), not the
-        // reverse: a zero-term doc has no termBuckets row, and an
-        // inner join would silently drop it from training while
-        // scoring still assigns it the bias — a train/serve skew on
-        // exactly the always-label-0 negatives (r14 ADVICE)
-        val wide = train.select(col("doc_id"), col("label"))
-          .join(termBuckets(train)
-            .groupBy(col("doc_id")).pivot("bucket", 0 until Dim)
-            .agg(sum(col("tf"))), Seq("doc_id"), "left")
-          .na.fill(0.0)
-        val assembled = new VectorAssembler()
-          .setInputCols(cols.toArray).setOutputCol("features")
-          .transform(wide)
-        val lr = new LogisticRegression()
-          .setFeaturesCol("features").setLabelCol("label")
-          .setMaxIter(60).setRegParam(1e-3).setStandardization(true)
-          .fit(assembled)
-        val w = lr.coefficients.toArray
-        val f0 = Fit(w, lr.intercept, Double.NaN,
-          train.count(), lab.filter(col("is_holdout")).count())
-        val scored = scoreWith(s, lab.filter(col("is_holdout")), f0)
-        val auc =
-          new org.apache.spark.ml.evaluation.BinaryClassificationEvaluator()
-            .setRawPredictionCol("score").setLabelCol("label")
-            .setMetricName("areaUnderROC")
-            .evaluate(scored.select(col("label").cast("double").as("label"),
-              col("score")))
-        f0.copy(auc = auc)
-      })
+    graft.BuildTimes.once("quality_classifier_fit", d) {
+      val lab = labeled(s, d)
+      val train = lab.filter(!col("is_holdout"))
+      val cols = (0 until Dim).map(_.toString)
+      // labels LEFT-join the pivot (zero-filling features), not the
+      // reverse: a zero-term doc has no termBuckets row, and an
+      // inner join would silently drop it from training while
+      // scoring still assigns it the bias — a train/serve skew on
+      // exactly the always-label-0 negatives (r14 ADVICE)
+      val wide = train.select(col("doc_id"), col("label"))
+        .join(termBuckets(train)
+          .groupBy(col("doc_id")).pivot("bucket", 0 until Dim)
+          .agg(sum(col("tf"))), Seq("doc_id"), "left")
+        .na.fill(0.0)
+      val assembled = new VectorAssembler()
+        .setInputCols(cols.toArray).setOutputCol("features")
+        .transform(wide)
+      val lr = new LogisticRegression()
+        .setFeaturesCol("features").setLabelCol("label")
+        .setMaxIter(60).setRegParam(1e-3).setStandardization(true)
+        .fit(assembled)
+      val w = lr.coefficients.toArray
+      val f0 = Fit(w, lr.intercept, Double.NaN,
+        train.count(), lab.filter(col("is_holdout")).count())
+      val scored = scoreWith(s, lab.filter(col("is_holdout")), f0)
+      val auc =
+        new org.apache.spark.ml.evaluation.BinaryClassificationEvaluator()
+          .setRawPredictionCol("score").setLabelCol("label")
+          .setMetricName("areaUnderROC")
+          .evaluate(scored.select(col("label").cast("double").as("label"),
+            col("score")))
+      f0.copy(auc = auc)
+    }
 
   /** Broadcast-weight scoring of a labeled frame: logit wx + b per
     * doc via bucket-join + sum (docs with no terms keep the bias).

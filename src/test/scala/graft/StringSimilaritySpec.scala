@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{JaroWinklerAlgo, StringSimilarity}
+import graft.functions.{JaroWinklerAlgo, Registry, StringSimilarity}
 
 /** Canonical Jaro–Winkler vectors (Winkler '90 / the census
   * comparator literature) + expression-level semantics. */
@@ -86,7 +86,7 @@ class StringSimilaritySpec extends SparkSpec {
 
   test("expression evaluates through codegen and SQL, null-safe") {
     import spark.implicits._
-    StringSimilarity.register(spark)
+    Registry.registerAll(spark)
     val df = Seq(("MARTHA", "MARHTA"), (null, "x"), ("x", null))
       .toDF("a", "b")
       .select(StringSimilarity.jaroWinkler(col("a"), col("b")).as("s"))

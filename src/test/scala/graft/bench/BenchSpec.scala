@@ -28,6 +28,15 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.runSpread(Seq(0.002, 0.004)).contains(2.0))
   }
 
+  test("tally: a failed query is listed, never silently shrinks the total") {
+    val (total, failed) =
+      Bench.tally(Seq("q_b" -> 2.0, "q_z" -> -1.0, "q_a" -> 1.5, "q_c" -> -1.0))
+    assert(total == 3.5)
+    assert(failed == Seq("q_c", "q_z"))
+    assert(Bench.tally(Seq("q_a" -> 1.0)) == ((1.0, Seq.empty)))
+    assert(Bench.tally(Seq.empty) == ((0.0, Seq.empty)))
+  }
+
   test("contentionHint: median of admissible spreads, ignoring excluded queries") {
     val spreads = Seq(Some(1.2), None, Some(1.0), Some(3.0), None)
     assert(Bench.contentionHint(spreads) == 1.2)

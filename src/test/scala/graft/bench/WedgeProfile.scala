@@ -1,6 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe: wedge volume under lexicographic canonicalization vs
@@ -20,9 +19,7 @@ import org.apache.spark.sql.functions._
 object WedgeProfile {
   def main(args: Array[String]): Unit = {
     val m = args.headOption.map(_.toInt).getOrElse(2000)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -34,7 +34,7 @@ class ArrayMathSpec extends SparkSpec {
   }
 
   test("dot_product is callable from spark.sql after registration") {
-    ArrayMath.register(spark)
+    Registry.registerAll(spark)
     val r = spark.sql("SELECT dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .head().getDouble(0)
     assert(r == 11.0)

@@ -94,7 +94,7 @@ class TopKBySpec extends SparkSpec {
   }
 
   test("top_k_by is callable from spark.sql after registration") {
-    TopKBy.register(spark)
+    Registry.registerAll(spark)
     graft.Tables.orders(spark, sf001).createOrReplaceTempView("orders_tk")
     val r = spark.sql(
       """SELECT o_orderpriority, top_k_by(o_totalprice, o_orderkey, 2) AS t

@@ -3,12 +3,12 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.functions.{ArrayMath, DotProduct}
+import graft.functions.{DotProduct, Registry}
 
 /** The engine's Catalyst extension surface: [[GraftExtensions]] as the
   * `spark.sql.extensions` entry point, and [[FuseDotProduct]] as an
   * optimizer rule reachable both through it and through
-  * `ArrayMath.register` (experimental.extraOptimizations).
+  * `Registry.registerAll` (experimental.extraOptimizations).
   */
 class ExtensionsSpec extends SparkSpec {
 
@@ -30,7 +30,7 @@ class ExtensionsSpec extends SparkSpec {
       col("l_discount"), col("l_tax"))
 
   test("FuseDotProduct rewrites the lambda idiom into the native kernel") {
-    ArrayMath.register(spark)
+    Registry.registerAll(spark)
     val v = vecs(spark)
     val df = v.select(
       aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
@@ -50,7 +50,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("FuseDotProduct leaves nullable-element arrays on the lambda path") {
-    ArrayMath.register(spark)
+    Registry.registerAll(spark)
     // transform(.., when(..)) yields containsNull = true — the two
     // formulations genuinely differ there (lambda chain nulls the sum,
     // DotProduct skips null slots), so the rule must NOT fire
@@ -74,10 +74,18 @@ class ExtensionsSpec extends SparkSpec {
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       assert(ext ne base, "expected a fresh session, got the shared one")
-      // SQL function resolves with no ArrayMath.register call
+      // SQL functions resolve with no Registry.registerAll call
       val r = ext.sql("SELECT dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
         .head().getDouble(0)
       assert(r == 11.0)
+      assert(ext.sql("SELECT jaro_winkler('MARTHA', 'MARTHA')").head().getDouble(0) == 1.0)
+      val n = ext.sql(
+        "SELECT kll_n(kll_sketch_agg(CAST(id AS DOUBLE), 200)) FROM range(10)")
+        .head().getLong(0)
+      assert(n == 10L)
+      Registry.functions.foreach { case (name, _, _) =>
+        assert(ext.catalog.functionExists(name), s"$name not injected")
+      }
       // the injected optimizer rule fires in this session
       val df = vecs(ext)
         .select(aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
